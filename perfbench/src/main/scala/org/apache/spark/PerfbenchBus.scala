@@ -1,0 +1,8 @@
+package org.apache.spark
+
+/** Waits until Spark's listener bus has delivered every queued event, so
+  * counters read right after an action include that action's tasks. The
+  * wait is package-private in Spark, hence this one-line bridge. */
+object PerfbenchBus {
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
