@@ -930,11 +930,10 @@ object Bench {
     * start, so the child's own per-query deadline guards just work). */
   private def runChild(mode: String): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val sf1Times = sys.env.get("SPARK_GRAFT_SF1TIMES")
       .map(readTimes).getOrElse(Map.empty)
     var sf1TimesChild: Map[String, Double] = sf1Times
-    val spark = buildSession(cpus)
+    val spark = GraftSession(appName = "graft-bench")
     mode match {
       case "child_sf10" =>
         val (full, short) = sf10Section(spark, sfDir, sf1Times, 0.0)
@@ -1138,38 +1137,17 @@ object Bench {
     println(s"""{"metric":"qscale","sf1_dir":"$dir","counts":[8,64,256,1000],"bm25_topk":$bj,"bm25_topk_pruned":$bpj,"ann_pq":$pj}""")
   }
 
-  private def buildSession(cpus: String): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // test parquet is a handful of ~10-30MB files; the 128MB default
-      // split size would serialize every scan onto one core. At cluster
-      // scale the default is right — this mirrors having many input
-      // files. 512k matches the synth corpora's row-group size, so
-      // byte-range splits land on group boundaries and a ~10MB table
-      // still spreads across ~20 cores without a rebalance shuffle.
-      .config("spark.sql.files.maxPartitionBytes", "512k")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
   def main(args: Array[String]): Unit = {
     if (args.length == 1 && args(0).startsWith("child_")) {
       runChild(args(0)); return
     }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // 2 trials (r12; was 3, originally 5): with the warm-up run every
     // query still executes 3x; median-of-2 = midpoint; the trials[]
     // array still exposes the spread per query.
     val nTrials = sys.env.getOrElse("SPARK_GRAFT_TRIALS", "2").toInt
     val isDriverRun = args.isEmpty
-    val spark = buildSession(cpus)
+    val spark = GraftSession(appName = "graft-bench")
     // warm the JVM/codegen once so per-query numbers measure the plan,
     // not first-call classloading
     try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
@@ -1285,7 +1263,7 @@ object Bench {
     val sparkScale =
       if (isDriverRun || args.exists(Set("sf1", "sf10", "sf100"))) {
         spark.stop()
-        buildSession(cpus)
+        GraftSession(appName = "graft-bench")
       } else spark
     val sparkScaleFinal: SparkSession = sparkScale
     val sf1On = !sys.env.get("SPARK_GRAFT_SF1").contains("off") &&
@@ -1372,7 +1350,8 @@ object Bench {
     // timeout, and the curated sf1Names queries run FIRST so a
     // truncation drops only the stable scan-bound tail whose medians
     // have been flat every round.
-    val sparkMain = if (isDriverRun) buildSession(cpus) else sparkScaleFinal
+    val sparkMain =
+      if (isDriverRun) GraftSession(appName = "graft-bench") else sparkScaleFinal
     val selected =
       if (args.isEmpty) SparkEntry.queries
       else SparkEntry.queries.filter(q => args.contains(q._1))

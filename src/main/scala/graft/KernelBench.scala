@@ -20,8 +20,7 @@ object KernelBench {
     val which = if (args.length > 1) args.drop(1).toSet
                 else Set("windows", "windows_long", "rag", "dsir", "impcap",
                   "hybrid")
-    val spark = GraftSession("local[" +
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32") + "]", "graft-kernelbench")
+    val spark = GraftSession(appName = "graft-kernelbench")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
       .localCheckpoint() // time the formulations, not the parquet read

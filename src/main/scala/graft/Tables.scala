@@ -76,15 +76,22 @@ object Tables {
     else df
   }
 
-  /** events with ts normalized: ts_ns LONG, ts TIMESTAMP (µs, UTC).
-    * Schema-adaptive: the driver corpus has shipped `ts` both as INT64
-    * TIMESTAMP(NANOS) (read as LONG under nanosAsLong) and as plain
-    * µs TIMESTAMP — both normalize to the same (ts_ns, ts) pair, so
-    * queries and oracles are corpus-revision-independent. */
+  /** events with ts normalized: ts_ns LONG, ts TIMESTAMP (µs, UTC). */
   def events(spark: SparkSession, dir: String): DataFrame = {
+    // GraftSession sets this too; repeated for the plain caller sessions
+    // `SparkEntry.queries` accept
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val path = s"$dir/events.parquet"
-    val raw = rebalance(spark, spark.read.parquet(path), path)
+    normalizeEvents(rebalance(spark, spark.read.parquet(path), path))
+  }
+
+  /** The one events normalization, shared by the batch reader above and
+    * the streaming reader (`StreamGate.readTable`). Schema-adaptive: the
+    * driver corpus has shipped `ts` both as INT64 TIMESTAMP(NANOS) (read
+    * as LONG under nanosAsLong) and as plain µs TIMESTAMP — both
+    * normalize to the same (ts_ns, ts) pair, so queries and oracles are
+    * corpus-revision-independent. */
+  def normalizeEvents(raw: DataFrame): DataFrame = {
     val norm = raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         raw.withColumnRenamed("ts", "ts_ns")
@@ -116,38 +123,4 @@ object Tables {
     rebalance(spark, apply(spark, dir, "documents"), s"$dir/documents.parquet")
   def embeddings(spark: SparkSession, dir: String): DataFrame =
     rebalance(spark, apply(spark, dir, "embeddings"), s"$dir/embeddings.parquet")
-}
-
-/** Session factory with the engine's standard tuning. AQE on so
-  * skew/coalesce replanning works at scale the same way it would on a
-  * real cluster. The two scale-dependent knobs are env-parameterised
-  * (r15, guide §2/§6 — never bake a local constant into a setting
-  * whose right value is cluster-dependent) with local-mode defaults:
-  *
-  *  - `SPARK_GRAFT_SHUFFLE_PARTITIONS` (default 32): matches local[32]
-  *    and this sandbox's ~10–30 MB test tables. On a cluster, size so
-  *    post-shuffle partitions land in the 100 MB–1 GB band (guide
-  *    §2.2) — AQE coalescing then trims the excess at runtime.
-  *  - `SPARK_GRAFT_MAX_PARTITION_BYTES` (default 4m): the test parquet
-  *    is a handful of small files; the 128 MB default would serialize
-  *    every scan onto one core. On a cluster keep the default or go
-  *    BIGGER (512m–1g) for large sequential scans (guide §6).
-  */
-object GraftSession {
-  def apply(master: String = "local[*]", appName: String = "graft"): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(master)
-      .appName(appName)
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "4m"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
 }

@@ -3,10 +3,11 @@ package graft
 /** JVM-exit-reaped temp fixtures. Query fixtures (imfile trees,
   * dynafile output dirs, dead-letter spools, rulebase files) must
   * outlive the lazily-evaluated DataFrames that read them, so the only
-  * safe reap point is JVM exit — the same pattern as StreamGate's sink
-  * dirs. Verify/Bench are one-shot JVMs and sbt test exits after the
-  * suites, so the hook always runs; before it, repeated local gate runs
-  * were accumulating hundreds of fixture dirs under /tmp.
+  * safe reap point is JVM exit (StreamGate's file-sink dirs register
+  * here for the same reason). Verify/Bench are one-shot JVMs and sbt
+  * test exits after the suites, so the hook always runs; before it,
+  * repeated local gate runs were accumulating hundreds of fixture dirs
+  * under /tmp.
   */
 object Tmp {
   private val paths = java.util.Collections.synchronizedList(

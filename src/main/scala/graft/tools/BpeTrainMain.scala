@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Regenerates the checked-in BPE fixture vocabulary
   * ([[graft.functions.BpeFixture]]) from a corpus directory:
   *
@@ -17,10 +15,7 @@ object BpeTrainMain {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val numMerges = if (args.length > 1) args(1).toInt else 256
     val sampleDocs = if (args.length > 2) args(2).toInt else 400
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession(appName = "graft-bpe-train")
     val vocab = graft.functions.Bpe.trainOnSample(
       graft.Tables.documents(spark, dir), "doc_id", "text",
       numMerges, sampleDocs)

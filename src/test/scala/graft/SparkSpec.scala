@@ -4,17 +4,11 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one JVM-wide session; suites are
-  * lazy so sbt test reuses it). */
+  * lazy so sbt test reuses it). Built by [[GraftSession]], so the suites
+  * run under the same config as Verify and Bench. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = GraftSession(appName = "graft-test")
     s.sparkContext.setLogLevel("ERROR")
     s
   }
