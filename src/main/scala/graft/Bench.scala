@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import graft.queries.Rank
 
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR, forcing full materialization through a noop write
@@ -40,18 +41,68 @@ object Bench {
     sys.env.getOrElse("SPARK_GRAFT_BUDGET_S", "1500").toDouble
   private def remainingS: Double = budgetS - elapsedS
 
-  // clean-run cost estimates (NOTES medians + headroom); used only for
-  // skip decisions, never reported as measurements. The per-SECTION
-  // estimates died in r15 — the top-down wall plan (see main) replaced
-  // section-entry gating with per-query guards + tiered reserves.
-  private val estSf100Query = // cold-JVM measurements (NOTES_r12) + margin
-    Map("dedup_verified" -> 380.0, "dedup_substring" -> 300.0,
-      "dedup_lines" -> 60.0, "decontaminate_fuzzy" -> 100.0,
-      "dedup_snapshot" -> 60.0, "dedup_snapshot_fuzzy" -> 150.0,
-      // r14 rotation (VERDICT r13 #6): one cheap round-new scan-bound
-      // operator + the PQ family's at-scale point (2M vectors), plus
-      // the retrieval family's (bm25's broadcast-pruned scan)
-      "tokenize_bpe" -> 60.0, "ann_pq" -> 90.0, "bm25_topk" -> 120.0)
+  // Section membership, order and the deadline guards' cost estimates
+  // come from each query's `scale` (graft.queries.Scale); the estimates
+  // are used only for skip decisions, never reported as measurements.
+  // The per-SECTION estimates died in r15 — the top-down wall plan (see
+  // main) replaced section-entry gating with per-query guards + tiered
+  // reserves.
+  private val registry = SparkEntry.registry
+  private val rankOf: Map[String, Rank] =
+    registry.flatMap(q => q.scale.sf10.map(q.name -> _)).toMap
+
+  /** sf10 members rank by rank in `ranks` order, registry order within a
+    * rank. */
+  private def ranked(ranks: Seq[Rank]): Seq[String] =
+    ranks.flatMap(r => registry.filter(_.scale.sf10.contains(r)).map(_.name))
+
+  /** The sf10 section's order: PRIORITY, not family — the per-query
+    * deadline guard truncates the TAIL, so a budget squeeze drops the
+    * least informative queries first (the r11 validation run lost
+    * dedup_verified to a 131 s dedup_ngram placed ahead of it). The
+    * mandate ranks lead (VERDICT r12 #1b, r14 #1b: a squeeze sheds
+    * Stable/Heavy FIRST — the mandate set is the top-priority claimant,
+    * never the residual one); the scan-bound Cheap rank runs before the
+    * flagship tier because it lands the most mandate entries per second
+    * (r15 sims #1-#2: under 5-8.6x contention the section's usable window
+    * is 100-300 s). text_quality leads NOT for priority but as the
+    * warm-up: a cheap full-corpus scan absorbs the fresh context's
+    * first-read cost so it doesn't land inside the flagship's timing. */
+  private[graft] val sf10Order: Seq[String] =
+    ("text_quality" +: ranked(Rank.inSectionOrder)).distinct
+
+  /** The tiny-corpus warm pass before sf10: EXPENSIVE-at-sf10 ranks
+    * first, so the pass's wall cap cuts only the cheap tail (a cold cheap
+    * query costs ~5 s of codegen in its timed run; a cold HEAVY costs 10x
+    * its steady time). */
+  private val sf10WarmOrder: Seq[String] =
+    ranked(Seq(Rank.Heavy, Rank.Flagship, Rank.Cheap, Rank.Composite, Rank.Stable))
+
+  /** The sf1 rehearsal (r12): the join/agg/stateful/iterative shapes
+    * whose scale behavior is NOT a linear extrapolation of their sf0.1
+    * medians — every sf10 query (so the sf10 deadline guard has a
+    * measured per-query sf1 anchor) plus the core relational/streaming
+    * compositions. The r11 section ran all 189 queries (399 s), but ~160
+    * of them are scan-bound projections whose sf1 point is just 10x their
+    * sf0.1 median — information the main loop already has — and that
+    * spend starved the sf10 section out of the driver artifact two
+    * rounds running (VERDICT r11 #1). The sf10 anchors run first, in
+    * sf10 order (r15 top-down budget): a squeeze that sheds the sf1 tail
+    * must shed the queries the guards DON'T need. */
+  private[graft] val sf1Order: Seq[String] =
+    sf10Order ++ registry.filter(q => q.scale.sf1 && q.scale.sf10.isEmpty).map(_.name)
+  private val sf1Set: Set[String] = sf1Order.toSet
+
+  /** The sf100 spot, CHEAPEST estimate first (r13): the driver run
+    * reaches this section with a small remaining budget, so the queries
+    * carrying the SUBLINEARITY claims (snapshot bloom 3.4×, line-dedup
+    * 2.7× at 10× data — the micro-spot VERDICT r12 #4 asked to land in
+    * the artifact) run first at ~20 s each; the 250-340 s exhaustive
+    * heavies (dedup_verified's pair verify, substring's window explode)
+    * run only when the wall allows — their sf100 points are already
+    * three rounds deep in NOTES. */
+  private[graft] val sf100Spots: Seq[(String, Double)] =
+    registry.flatMap(q => q.scale.sf100EstS.map(q.name -> _)).sortBy(_._2)
 
   /** Host-speed calibration anchor: the r11 (uncontended) median of the
     * 524,288-msg trial on this host class, in msgs/s. The engine code
@@ -97,6 +148,11 @@ object Bench {
   private def fmtTrials(xs: Seq[Double]): String =
     xs.map(x => f"$x%.3f").mkString("[", ",", "]")
 
+  // the sf1 corpus and its versioned completion marker (see
+  // synthesizeSf1); the settle rounds also run on it when present
+  private val sf1Out = "/tmp/graft_sf1"
+  private val sf1Marker = new java.io.File(sf1Out, "_SYNTH_DONE_v6")
+
   /** sf1 rehearsal corpus: 10 shards of the sf0.1 documents/embeddings/
     * events tables with remapped ids. Doc shards 0-3 are EXACT copies
     * (byte-identical text) and shards 4-9 differ by one trailing token,
@@ -109,7 +165,7 @@ object Bench {
   private def synthesizeSf1(spark: SparkSession, sfDir: String,
                             shards: Int = 10): String = {
     import org.apache.spark.sql.functions._
-    val out = "/tmp/graft_sf1"
+    val out = sf1Out
     // versioned marker: bumping it invalidates caches synthesized with an
     // older corpus shape (v2 = exact-copy shards + lineitem/nation;
     // v3 = splittable outputs — multi-file dirs and small parquet row
@@ -123,7 +179,7 @@ object Bench {
     // ~20 groups lets Tables.rebalance skip its compensating shuffle
     // while scans keep >= half the cores busy; v6 = orders/customer
     // shards for the q3_join relational baseline)
-    val marker = new java.io.File(out, "_SYNTH_DONE_v6")
+    val marker = sf1Marker
     val hconf = spark.sparkContext.hadoopConfiguration
     if (!marker.exists()) {
       val prevBlock = hconf.get("parquet.block.size")
@@ -338,25 +394,66 @@ object Bench {
     out
   }
 
-  /** One more decade of measured scale curve for the two most expensive
-    * sf10 queries (near-dup verify, substring dedup): single-trial spot
-    * run at sf100 (5M docs). The check is near-linearity — each query
-    * should land within ~10× its sf10 wall-time. */
+  /** One timed pass of a scale section: each query runs once at `dir`
+    * through a noop write, after a block reclaim (plus a full GC only
+    * when `gc` — see `reclaim`: 38 multi-second Pause Fulls in the v5
+    * child). `skip` is the section's per-query deadline guard, checked
+    * right before the query would start: section-ENTRY gating is not
+    * enough (the r11 driver-simulation run measured the sf10 section at
+    * 763 s against a 380 s clean estimate), so the tail is truncated
+    * loudly instead of running past the wall. */
+  private def timedPass(spark: SparkSession, section: String, dir: String,
+                        names: Seq[String], gc: Boolean = false)
+                       (skip: String => Boolean): Pass = {
+    val skipped = scala.collection.mutable.ArrayBuffer.empty[String]
+    val timed = names.flatMap { n =>
+      if (skip(n)) {
+        System.err.println(f"[bench:$section] $n skipped (budget: ${remainingS}%.0fs left)")
+        skipped += n
+        None
+      } else {
+        reclaim(spark, gc)
+        val t0 = System.nanoTime()
+        val ok =
+          try { SparkEntry.queries(n)(spark, dir).write.format("noop").mode("overwrite").save(); true }
+          catch { case e: Throwable =>
+            System.err.println(s"[bench:$section] $n failed: ${e.getMessage}"); false
+          }
+        val dt = (System.nanoTime() - t0) / 1e9
+        System.err.println(f"[bench:$section] $n%-18s $dt%8.2fs${if (ok) "" else "  FAILED"}")
+        Some((n, dt, ok))
+      }
+    }
+    Pass(timed, skipped.toSeq)
+  }
+
+  /** A section's (name, seconds, ok) entries and the names its guard
+    * skipped, with the JSON fragments every section line carries. */
+  private final case class Pass(timed: Seq[(String, Double, Boolean)],
+                                skipped: Seq[String]) {
+    def queriesJson: String = timed.map { case (n, t, ok) =>
+      "\"" + n + "\":" + (if (ok) f"$t%.3f" else "null")
+    }.mkString("{", ",", "}")
+    def total: Double = timed.filter(_._3).map(_._2).sum
+    def failed: Int = timed.count(!_._3)
+    def worstJson(k: Int): String = timed.filter(_._3).sortBy(-_._2).take(k)
+      .map { case (n, t, _) => "\"" + n + f"""\":$t%.3f""" }.mkString("{", ",", "}")
+    def skipJson: String =
+      if (skipped.isEmpty) ""
+      else skipped.map("\"" + _ + "\"").mkString(""","skipped":[""", ",", "]")
+    def times: Map[String, Double] =
+      timed.filter(_._3).map { case (n, t, _) => n -> t }.toMap
+  }
+
+  /** One more decade of measured scale curve for the dedup/ANN/BPE
+    * family: single-trial spot run at sf100 (5M docs, 2M vectors), in
+    * `sf100Spots` order (cheapest estimate first). The check is
+    * near-linearity — each query should land within ~10× its sf10
+    * wall-time. */
   private def sf100Spot(spark: SparkSession, sfDir: String,
                         forced: Boolean,
                         shared: Boolean = false): (String, String) = {
-    // CHEAP-FIRST order (r13): the driver run reaches this section with
-    // a small remaining budget, so the queries carrying the SUBLINEARITY
-    // claims (snapshot bloom 3.4×, line-dedup 2.7× at 10× data — the
-    // micro-spot VERDICT r12 #4 asked to land in the artifact) run
-    // first at ~20 s each; the 250-340 s exhaustive heavies
-    // (dedup_verified's pair verify, substring's window explode) run
-    // only when the wall allows — their sf100 points are already three
-    // rounds deep in NOTES.
-    val names = Seq("tokenize_bpe", "ann_pq", "bm25_topk",
-      "dedup_snapshot", "dedup_lines",
-      "dedup_snapshot_fuzzy", "decontaminate_fuzzy",
-      "dedup_verified", "dedup_substring")
+    val names = sf100Spots.map(_._1)
     val dir = synthesizeSf100(spark, sfDir)
     // `shared` = running right after the sf10 section in the same JVM
     // (child_scale): code warmth and the heap-floor fault bill are
@@ -367,7 +464,7 @@ object Bench {
     // timed spot entries is exactly what the gate needs to see
     val absorbJson = if (!shared) {
       warmQueries(spark, sfDir, names, capS = 90.0)
-      absorbHeapFloor(spark, dir)
+      absorberJson(settle(spark, dir, "text_quality", absorbFirst = true))
     } else ""
     // untimed sf100-corpus first read — the sf10 section's rationale
     // at one more decade (the 5M-doc parquet footer walk + cold page
@@ -382,41 +479,15 @@ object Bench {
         .write.format("noop").mode("overwrite").save()
     } catch { case _: Throwable => }
     reclaim(spark, gc = false)
-    val skipped = scala.collection.mutable.ArrayBuffer.empty[String]
-    val timed = names.flatMap { n =>
-      SparkEntry.queries.get(n).flatMap { fn =>
-        // per-query deadline check (bypassed when `sf100` was an
-        // explicit arg — standalone runs own their wall clock)
-        if (!forced && remainingS < estSf100Query.getOrElse(n, 400.0)) {
-          System.err.println(f"[bench:sf100] $n skipped (budget: ${remainingS}%.0fs left)")
-          skipped += n
-          None
-        } else {
-          reclaim(spark, gc = false) // blocks only; no full GC in children
-          val t0 = System.nanoTime()
-          val ok =
-            try { fn(spark, dir).write.format("noop").mode("overwrite").save(); true }
-            catch { case e: Throwable =>
-              System.err.println(s"[bench:sf100] $n failed: ${e.getMessage}"); false
-            }
-          val dt = (System.nanoTime() - t0) / 1e9
-          System.err.println(f"[bench:sf100] $n%-18s $dt%8.2fs${if (ok) "" else "  FAILED"}")
-          Some((n, dt, ok))
-        }
-      }
-    }
+    // per-query deadline check against the query's own estimate
+    // (bypassed when `sf100` was an explicit arg — standalone runs own
+    // their wall clock)
+    val estS = sf100Spots.toMap
+    val pass = timedPass(spark, "sf100", dir, names)(n =>
+      !forced && remainingS < estS(n))
     val nDocs = Tables.documents(spark, dir).count()
-    val qj = timed.map { case (n, t, ok) =>
-      "\"" + n + "\":" + (if (ok) f"$t%.3f" else "null")
-    }.mkString("{", ",", "}")
-    val total = timed.filter(_._3).map(_._2).sum
-    val failed = timed.count(!_._3)
-    val skipJson =
-      if (skipped.isEmpty) ""
-      else skipped.map("\"" + _ + "\"")
-        .mkString(""","skipped":[""", ",", "]")
-    (f""""sf100_spot":{"dir":"$dir","shards":1000,"rows":{"documents":$nDocs},$absorbJson$hostEchoJson"queries":$qj,"total":$total%.3f,"failed":$failed$skipJson}""",
-     f""""sf100_total":$total%.3f,"sf100_failed":$failed""")
+    (f""""sf100_spot":{"dir":"$dir","shards":1000,"rows":{"documents":$nDocs},$absorbJson$hostEchoJson"queries":${pass.queriesJson},"total":${pass.total}%.3f,"failed":${pass.failed}${pass.skipJson}}""",
+     f""""sf100_total":${pass.total}%.3f,"sf100_failed":${pass.failed}""")
   }
 
   /** Single-trial spot-run of the dedup/ANN family at sf10 — the 100 TB
@@ -426,90 +497,23 @@ object Bench {
     * generation, iterative CC, ANN) plus the flagship training-data
     * compositions over the same 100-shard document corpus (llm_prep's
     * dedup shuffle, decontaminate's broadcast-gram join, seq_pack's
-    * per-shard windows); the rest of the suite has its sf1 point. */
-  // PRIORITY order, not family order: the per-query deadline guard
-  // truncates the TAIL, so a budget squeeze drops the least
-  // informative queries first (the r11 validation run lost
-  // dedup_verified to a 131 s dedup_ngram placed ahead of it).
-  // Tiers (VERDICT r12 #1b, r14 #1b):
-  //   new:  EVERY not-yet-two-rounds-old operator — its artifact
-  //         presence is the round mandate;
-  //   1:    the four mandated flagship entries + the pre-r13 ANN
-  //         family (the other half of the mandate set);
-  //   mid:  stable legacy whose sf10 points are rounds deep;
-  //   heavy: the expensive exhaustive fallbacks (ngram's inverted
-  //         index, simhash's fat buckets, substring's window explode).
-  // A budget squeeze sheds mid/heavy FIRST — the mandate set is the
-  // top-priority claimant, never the residual one.
-  // tierNew r15: the r14 additions roll off after two artifact rounds;
-  // r15-new is hybrid_retrieve_pq (the pluggable-leg composition).
-  private val tier1 = Seq(
-    "text_quality",
-    "dedup_verified", "dedup_clusters_verified",
-    "decontaminate_fuzzy", "dedup_lines",
-    "ann_cosine", "ann_lsh", "ann_ivf", "emb_stats")
-  // tierNew is split CHEAP/HEAVY (r15 sims #1-#2: the section's usable
-  // window under 5-8.6x contention is 100-300 s; sim #1 put
-  // hybrid_retrieve_pq's 57 s checkpoint ahead of the sub-2s ANN/BPE
-  // entries and landed 4 mandate entries where ~15 fit; sim #2 fixed
-  // that but the retrieval mid-weights (sample_dsir 98.6 s, hybrid
-  // 47.1) then starved the FLAGSHIP tier out entirely). Scan-bound
-  // round-new kernels run first (most mandate entries per second),
-  // the flagship tier second, the retrieval/composition mid-weights
-  // third — under a squeeze the artifact keeps the cheap round-new
-  // set AND the flagship entries, shedding the expensive round-new
-  // tail before either.
-  private val tierNewCheap = Seq(
-    "ann_pq", "ann_ivfpq", "ann_sq8", "ann_hamming", "ann_hamming_rerank",
-    "tokenize_bpe", "chunk_tokens_bpe", "sample_temperature",
-    "token_budget_bpe", "corpus_stats_bpe", "seq_pack_bpe",
-    "bpe_fertility", "dedup_report")
-  private val tierNewHeavy = Seq(
-    "hybrid_retrieve_pq", "ann_recall_audit", "bm25_topk",
-    "hybrid_retrieve", "mmr_rerank", "sample_dsir", "rag_retrieve",
-    "split_leakage_safe")
-  private def tierNew = tierNewCheap ++ tierNewHeavy
-  private val tierMid = Seq(
-    "dedup_snapshot", "dedup_snapshot_fuzzy", "ngram_hot",
-    "quality_classifier", "token_budget", "corpus_stats",
-    "cluster_topics", "sample_shuffle", "sample_perplexity",
-    "dedup_exact", "dedup_canonical", "dedup_semantic", "dedup_url",
-    "dedup_keep_best", "llm_prep", "decontaminate",
-    "decontaminate_semantic", "contamination_report",
-    "text_repetition", "text_fingerprint",
-    "sample_stratified", "seq_pack", "lm_score", "quality_gopher",
-    "tfidf_topk")
-  private val tierHeavy = Seq(
-    "dedup_minhash", "emb_neardup",
-    "dedup_clusters", "dedup_simhash",
-    "dedup_substring", "dedup_substring_removal", "dedup_ngram")
-  /** The mandate set whose sf10 entries the artifact must carry
-    * (VERDICT r14 #1b done-bar): round-new + flagship tiers. */
-  private def mandateNames: Seq[String] = tierNew ++ tier1
-
-  private def sf10Section(spark0: SparkSession, sfDir: String,
+    * per-shard windows); the rest of the suite has its sf1 point.
+    * Queries run in `sf10Order`. */
+  private def sf10Section(spark: SparkSession, sfDir: String,
                           sf1Times: Map[String, Double],
                           reserveS: Double,
                           shared: Boolean = false): (String, String) = {
-    // text_quality leads NOT for priority but as the warm-up: a cheap
-    // full-corpus scan absorbs the fresh context's first-read cost so
-    // it doesn't land inside the flagship's timing.
     // round-new operators BEFORE the flagship heavies (r13 sim #5): the
     // residual heap-fault bill lands stochastically in the first heavy
     // allocators (verified/clusters_verified swung 34-111 s across
     // same-binary sims), and when it lands hard it must only ever eat
-    // the tail — the ~15 round-new queries cost ~90 s total and their
-    // artifact presence is the round mandate. text_quality stays first
-    // as the scan warm-up.
-    val names = Seq("text_quality") ++ tierNewCheap ++
-      tier1.filterNot(_ == "text_quality") ++ tierNewHeavy ++
-      tierMid ++ tierHeavy
+    // the tail.
     // NO in-section context restarts (r13, branch deleted r14 — ADVICE):
     // the r12 in-section inflation was JVM-level; in the fresh
     // warm-code/pinned-heap child a context restart buys nothing.
     // per-query wall-cost estimate for the deadline guard: the query's
     // OWN measured sf1 time from the section that just ran, scaled by
-    // the 10x data factor plus a 30% margin, clamped to [25, 300] s.
+    // the 10x data factor plus a 30% margin, clamped to [25, capS] s.
     // The floor was 60 s through r13; the r14 clean sim showed that on
     // a 2.6x-contended host the floor itself became the shedding
     // driver — 30 sub-2s-at-sf1 queries were skipped that would each
@@ -517,51 +521,36 @@ object Bench {
     // observed cheap-query time under contention ~10 s), and the guard
     // re-checks ACTUAL remaining wall before every query, so the only
     // exposure is one final query overshooting into the child's 180 s
-    // grace. Queries WITHOUT an sf1 anchor fall back by TIER (r15 sim
-    // #1: heavy contention shed the whole sf1 section, every needS
-    // degraded to the old flat 160, and the flat estimate then shed
-    // the sub-10s mandate queries it was supposed to protect — 4/21
-    // mandate entries timed where ~15 fit): mandate-tier queries are
-    // round-new kernels measured sub-10s at sf10 post-kernel-fix → 60
-    // covers them at 5x contention; mid/heavy keep the conservative
-    // 160. The guard also holds back `reserveS` for the sf100
-    // micro-spot that follows this section (VERDICT r12 #4: the spot
-    // is worth two sf10 tail queries).
-    val cheapFallbackSet = (tierNewCheap :+ "text_quality").toSet
-    val midFallbackSet = (tierNewHeavy ++ tier1).toSet
-    // mandate-tier estimates clamp at 180, not 300 (r15 sim #3: one
-    // contention burst during sf1 put dedup_verified at 74.9 s — 8.5x
-    // its steady state — and the 13x-scaled 300-clamped estimate then
-    // shed the FLAGSHIP entry from sf10; every mandate query has
-    // measured ≤55 s at sf10 across three rehearsals, so 180 still
-    // carries 3x margin while keeping one bad sf1 sample from vetoing
-    // a mandate entry)
+    // grace. Queries WITHOUT an sf1 anchor fall back to their rank's
+    // estimate (r15 sim #1: heavy contention shed the whole sf1 section,
+    // every estimate degraded to the old flat 160, and the flat estimate
+    // then shed the sub-10s mandate queries it was supposed to protect —
+    // 4/21 mandate entries timed where ~15 fit). Mandate-rank estimates
+    // clamp at 180, not 300 (r15 sim #3: one contention burst during sf1
+    // put dedup_verified at 74.9 s — 8.5x its steady state — and the
+    // 13x-scaled 300-clamped estimate then shed the FLAGSHIP entry from
+    // sf10; every mandate query has measured ≤55 s at sf10 across three
+    // rehearsals, so 180 still carries 3x margin while keeping one bad
+    // sf1 sample from vetoing a mandate entry). The guard also holds back
+    // `reserveS` for the sf100 micro-spot that follows this section
+    // (VERDICT r12 #4: the spot is worth two sf10 tail queries).
     def needS(n: String): Double = {
-      val cap = if (cheapFallbackSet.contains(n) ||
-        midFallbackSet.contains(n)) 180.0 else 300.0
-      sf1Times.get(n).map(t => (t * 13.0).max(25.0).min(cap))
-        .getOrElse(
-          if (cheapFallbackSet.contains(n)) 60.0
-          else if (midFallbackSet.contains(n)) 120.0
-          else 160.0)
+      val rank = rankOf(n)
+      sf1Times.get(n).map(t => (t * 13.0).max(25.0).min(rank.capS))
+        .getOrElse(rank.fallbackS)
     }
-    val spark = spark0
     val sf10Dir = synthesizeSf10(spark, sfDir)
     // `shared` = running inside child_scale AFTER the sf1 section: the
     // warm pass and the heap-floor absorber were paid before sf1 (so
     // sf1's own entries are protected too — VERDICT r14 #1a), and what
     // this section needs is only the ANN-profile CANARY below.
     if (!shared) {
-      // tiny-corpus code warm-up, EXPENSIVE-at-sf10 queries first so the
-      // cap cuts only the cheap tail (a cold cheap query costs ~5 s of
-      // codegen in its timed run; a cold HEAVY costs 10x its steady
-      // time); cap 90 — final-sim r14 #2 spent 152 s warming 30/60
-      // under contention
-      warmQueries(spark, sfDir, tierHeavy ++ tier1 ++ tierNew ++ tierMid,
-        capS = 90.0)
+      // cap 90 — final-sim r14 #2 spent 152 s warming 30/60 under
+      // contention
+      warmQueries(spark, sfDir, sf10WarmOrder, capS = 90.0)
     }
     // untimed ALLOCATION-heavy absorber with a MEASURED completion
-    // precondition (r14; see absorbHeapFloor): the heap floor's one-time
+    // precondition (r14; see settle): the heap floor's one-time
     // page-fault bill (G1 region sweep faults pages on first touch of
     // the committed floor — ~45 s for 24 GB on this slow-zeroing host)
     // lands here instead of inside the first timed queries. sf1 scale
@@ -571,12 +560,20 @@ object Bench {
     // is the ANN-PROFILE canary (VERDICT r14 #1c): text_quality
     // settling does not prove the ANN family's allocation profile is
     // clean — r14's artifact carried ann_hamming at 50.1 s AFTER a
-    // settled absorber. ann_pq runs twice at the absorber corpus right
-    // before the ANN-heavy tierNew block; if the pair is asymmetric, a
-    // residual bill was still landing — absorb again, bounded.
+    // settled absorber. The residual heap-fault bill lands by
+    // cumulative-allocation pattern, and the ANN family (codebook
+    // collects, posexplode distance arrays, window pre-cuts) allocates
+    // nothing like a text scan: the cheapest ANN query (ann_pq) runs
+    // twice at the absorber corpus right before the section; if the
+    // pair is asymmetric, a residual bill was still landing — absorb
+    // again, bounded.
     val absorbJson =
-      (if (!shared) absorbHeapFloor(spark, sf10Dir) else "") +
-        annCanary(spark, sf10Dir)
+      (if (!shared)
+        absorberJson(settle(spark, sf10Dir, "text_quality", absorbFirst = true))
+      else "") + {
+        val s = settle(spark, sf10Dir, "ann_pq", absorbFirst = false)
+        s""""ann_canary":{"settled":${s.settled},"canary_s":${s.canaryJson},"absorb_s":${s.absorbJson}},"""
+      }
     // untimed sf10-corpus first read (r14, clean-sim finding): the
     // absorber runs against the CACHED sf1 corpus, so the sf10
     // parquet's cold first read (page cache + footer decode) still
@@ -589,61 +586,26 @@ object Bench {
     // heap-fault bill the absorber's bounded retries did not sweep
     // also lands here — the timed pass then measures steady state.
     try {
-      SparkEntry.queries.get("text_quality").foreach(
-        _(spark, sf10Dir).write.format("noop").mode("overwrite").save())
+      SparkEntry.queries("text_quality")(spark, sf10Dir)
+        .write.format("noop").mode("overwrite").save()
       Tables.embeddings(spark, sf10Dir)
         .write.format("noop").mode("overwrite").save()
     } catch { case _: Throwable => }
     reclaim(spark, gc = false)
-    val skipped = scala.collection.mutable.ArrayBuffer.empty[String]
-    // TIERED sf100 reserve (r15 top-down budget): while the MANDATE set
-    // (round-new + flagship) is running, only the ≥3-cheap-spot sf100
-    // floor is held back — the full reserve would let a contended wall
-    // shed mandate queries to protect optional sf100 heavies, which is
-    // the priority inversion r14 died of. Mid/heavy tiers hold back the
-    // caller's full reserve.
-    val mandateSet = (mandateNames :+ "text_quality").toSet
+    // TIERED sf100 reserve (r15 top-down budget): while the MANDATE
+    // ranks run, only the ≥3-cheap-spot sf100 floor is held back — the
+    // full reserve would let a contended wall shed mandate queries to
+    // protect optional sf100 heavies, which is the priority inversion
+    // r14 died of. Stable/Heavy hold back the caller's full reserve.
     def reserveFor(n: String): Double =
-      if (mandateSet.contains(n)) math.min(reserveS, sf100MandateReserveS)
+      if (rankOf(n).mandate) math.min(reserveS, sf100MandateReserveS)
       else reserveS
-    val timed = names.flatMap { n =>
-      SparkEntry.queries.get(n).flatMap { fn =>
-        // per-query deadline guard: section-ENTRY gating is not enough —
-        // the r11 driver-simulation run measured this section at 763 s
-        // against a 380 s clean estimate. Skip the tail loudly rather
-        // than blow the budget (or eat the sf100 micro-spot's reserve).
-        if (remainingS - reserveFor(n) < needS(n)) { skipped += n; None }
-        else Some(fn)
-      }.map { fn =>
-        // deterministic block reclaim between queries — no full GC (see
-        // `reclaim`: 38 multi-second Pause Fulls in the v5 child)
-        reclaim(spark, gc = false)
-        val t0 = System.nanoTime()
-        val ok = try {
-          fn(spark, sf10Dir).write.format("noop").mode("overwrite").save(); true
-        } catch { case e: Throwable =>
-          System.err.println(s"[bench:sf10] $n failed: ${e.getMessage}"); false
-        }
-        val dt = (System.nanoTime() - t0) / 1e9
-        System.err.println(f"[bench:sf10] $n%-18s $dt%8.2fs${if (ok) "" else "  FAILED"}")
-        (n, dt, ok)
-      }
-    }
+    val pass = timedPass(spark, "sf10", sf10Dir, sf10Order)(n =>
+      remainingS - reserveFor(n) < needS(n))
     val nDocs = Tables.documents(spark, sf10Dir).count()
     val nEmb = Tables.embeddings(spark, sf10Dir).count()
-    val qj = timed.map { case (n, t, ok) =>
-      "\"" + n + "\":" + (if (ok) f"$t%.3f" else "null")
-    }.mkString("{", ",", "}")
-    val total = timed.filter(_._3).map(_._2).sum
-    val failed = timed.count(!_._3)
-    val worst = timed.filter(_._3).sortBy(-_._2).take(3)
-      .map { case (n, t, _) => "\"" + n + f"""\":$t%.3f""" }.mkString("{", ",", "}")
-    val skipJson =
-      if (skipped.isEmpty) ""
-      else skipped.map("\"" + _ + "\"")
-        .mkString(""","skipped":[""", ",", "]")
-    (f""""sf10":{"dir":"$sf10Dir","shards":100,"rows":{"documents":$nDocs,"embeddings":$nEmb},$absorbJson$hostEchoJson"queries":$qj,"total":$total%.3f,"failed":$failed$skipJson}""",
-     f""""sf10_total":$total%.3f,"sf10_failed":$failed,"sf10_worst":$worst""")
+    (f""""sf10":{"dir":"$sf10Dir","shards":100,"rows":{"documents":$nDocs,"embeddings":$nEmb},$absorbJson$hostEchoJson"queries":${pass.queriesJson},"total":${pass.total}%.3f,"failed":${pass.failed}${pass.skipJson}}""",
+     f""""sf10_total":${pass.total}%.3f,"sf10_failed":${pass.failed},"sf10_worst":${pass.worstJson(3)}""")
   }
 
   /** The parent's measured host factor, passed into scale children via
@@ -656,114 +618,33 @@ object Bench {
       .flatMap(s => scala.util.Try(s.toDouble).toOption)
       .map(f => f""""host_factor_at_trial":$f%.3f,""").getOrElse("")
 
-  /** The curated sf1 rehearsal subset (r12): the join/agg/stateful/
-    * iterative shapes whose scale behavior is NOT a linear extrapolation
-    * of their sf0.1 medians — every sf10-section query (so the sf10
-    * deadline guard has a measured per-query sf1 anchor) plus the core
-    * relational/streaming compositions. The r11 section ran all 189
-    * queries (399 s), but ~160 of them are scan-bound projections whose
-    * sf1 point is just 10x their sf0.1 median — information the main
-    * loop already has — and that spend starved the sf10 section out of
-    * the driver artifact two rounds running (VERDICT r11 #1). */
-  private val sf1Names = Seq(
-    // flagship + relational core
-    "llm_prep", "pipeline_e2e", "q1_agg", "q3_join", "skew_join",
-    "window_agg", "session_window", "stream_llm_prep",
-    "stream_dedup_snapshot", "stream_dedup_snapshot_fuzzy",
-    "stream_cluster_topics", "stream_corpus_stats",
-    "stream_contamination_report", "stream_bpe_fertility",
-    // dedup family (candidate generation, iterative CC, anti-joins)
-    "dedup_exact", "dedup_canonical", "dedup_minhash", "dedup_verified",
-    "dedup_clusters_verified", "dedup_clusters", "dedup_simhash",
-    "dedup_ngram", "dedup_substring", "dedup_substring_removal",
-    "dedup_lines", "dedup_semantic", "dedup_url", "dedup_snapshot",
-    "dedup_snapshot_fuzzy",
-    // decontamination + sampling/packing
-    "decontaminate", "decontaminate_fuzzy", "decontaminate_semantic",
-    "contamination_report", "sample_stratified", "sample_shuffle",
-    "sample_domain_mix", "sample_perplexity", "sample_temperature",
-    "sample_dsir",
-    "seq_pack", "chunk_tokens", "chunk_tokens_bpe",
-    "dedup_keep_best",
-    // ANN / embeddings
-    "ann_cosine", "ann_lsh", "ann_ivf", "ann_pq", "ann_ivfpq", "ann_sq8",
-    "ann_hamming", "ann_hamming_rerank", "ann_recall_audit",
-    "emb_neardup", "emb_stats", "cluster_topics",
-    // text-analysis aggregations and model scoring
-    "tfidf_topk", "bm25_topk", "rag_retrieve", "hybrid_retrieve",
-    "hybrid_retrieve_pq", "mmr_rerank",
-    "lm_score", "quality_classifier", "quality_gopher",
-    "quality_calibration", "token_budget", "corpus_stats", "ngram_hot",
-    "text_quality", "text_repetition", "text_fingerprint",
-    "tokenize_bpe", "token_budget_bpe", "corpus_stats_bpe",
-      "seq_pack_bpe", "bpe_fertility", "dedup_report",
-      "split_leakage_safe")
-
-  /** One bench pass of the curated sf1 subset at the synthesized sf1
-    * scale — the families whose scale behavior is non-obvious get a
-    * recorded data point one decade above verification scale, so a
-    * scale cliff surfaces here instead of in production. Single trial
-    * each (the medians come from the main sf0.1 loop); the point is
-    * no-OOM/no-pathology completion and the timing curve vs sf0.1.
-    * Also returns the per-query wall times — the sf10 section derives
-    * its per-query deadline guards from them. */
+  /** One bench pass of the sf1 rehearsal (`sf1Order`) at the
+    * synthesized sf1 scale — the families whose scale behavior is
+    * non-obvious get a recorded data point one decade above verification
+    * scale, so a scale cliff surfaces here instead of in production.
+    * Single trial each (the medians come from the main sf0.1 loop); the
+    * point is no-OOM/no-pathology completion and the timing curve vs
+    * sf0.1. Also returns the per-query wall times — the sf10 section
+    * derives its per-query deadline guards from them. */
   private def sf1Section(spark: SparkSession, sfDir: String,
                          mandateReserveS: Double = 0.0)
       : (String, String, Map[String, Double]) = {
-    // sf10-ANCHOR names first (r15 top-down budget): the sf10 section's
-    // per-query deadline guards are derived from these sf1 times, so a
-    // budget squeeze that sheds the sf1 tail must shed the queries the
-    // guards DON'T need — the non-anchor relational/streaming names run
-    // last. Within each half, sf1Names order (flagships lead).
-    val sf10Set = (tierNew ++ tier1 ++ tierMid ++ tierHeavy).toSet
-    val names = {
-      val (anchors, rest) = sf1Names.partition(sf10Set.contains)
-      anchors ++ rest
-    }
     val sf1Dir = synthesizeSf1(spark, sfDir)
     // shed cached blocks so the 10x-scale timings measure the plans,
     // not accumulated heap state (a no-op in the fresh child)
     reclaim(spark)
-    val skipped = scala.collection.mutable.ArrayBuffer.empty[String]
-    val timed = names.flatMap { n =>
-      SparkEntry.queries.get(n).flatMap { fn =>
-        // per-query deadline guard (see sf10Section): truncate the tail
-        // loudly instead of running the whole bench past the wall. The
-        // caller's mandateReserveS holds back the sf10-mandate + sf100
-        // floor — sf1 is the FIRST optional claimant to shed (VERDICT
-        // r14 #1b: the mandate must never be the residual claimant).
-        if (remainingS - mandateReserveS < 60) { skipped += n; None }
-        else Some(fn)
-      }.map { fn =>
-        reclaim(spark) // same retained-heap guard as the sf10 section
-        val t0 = System.nanoTime()
-        val ok =
-          try { fn(spark, sf1Dir).write.format("noop").mode("overwrite").save(); true }
-          catch { case e: Throwable =>
-            System.err.println(s"[bench:sf1] $n failed: ${e.getMessage}"); false
-          }
-        val dt = (System.nanoTime() - t0) / 1e9
-        System.err.println(f"[bench:sf1] $n%-18s $dt%8.2fs${if (ok) "" else "  FAILED"}")
-        (n, dt, ok)
-      }
-    }
+    // the caller's mandateReserveS holds back the sf10-mandate + sf100
+    // floor — sf1 is the FIRST optional claimant to shed (VERDICT r14
+    // #1b: the mandate must never be the residual claimant). Full GC
+    // between queries: the same retained-heap guard as the sf10 section.
+    val pass = timedPass(spark, "sf1", sf1Dir, sf1Order, gc = true)(_ =>
+      remainingS - mandateReserveS < 60)
     val nDocs = Tables.documents(spark, sf1Dir).count()
     val nEmb = Tables.embeddings(spark, sf1Dir).count()
     val nEv = Tables.events(spark, sf1Dir).count()
-    val qj = timed.map { case (n, t, ok) =>
-      "\"" + n + "\":" + (if (ok) f"$t%.3f" else "null")
-    }.mkString("{", ",", "}")
-    val total = timed.filter(_._3).map(_._2).sum
-    val failed = timed.count(!_._3)
-    val worst = timed.filter(_._3).sortBy(-_._2).take(5)
-      .map { case (n, t, _) => "\"" + n + f"""\":$t%.3f""" }.mkString("{", ",", "}")
-    val skipJson =
-      if (skipped.isEmpty) ""
-      else skipped.map("\"" + _ + "\"")
-        .mkString(""","skipped":[""", ",", "]")
-    (f""""sf1":{"dir":"$sf1Dir","shards":10,"rows":{"documents":$nDocs,"embeddings":$nEmb,"events":$nEv},"queries":$qj,"total":$total%.3f,"failed":$failed$skipJson}""",
-     f""""sf1_total":$total%.3f,"sf1_failed":$failed,"sf1_worst":$worst""",
-     timed.filter(_._3).map { case (n, t, _) => n -> t }.toMap)
+    (f""""sf1":{"dir":"$sf1Dir","shards":10,"rows":{"documents":$nDocs,"embeddings":$nEmb,"events":$nEv},"queries":${pass.queriesJson},"total":${pass.total}%.3f,"failed":${pass.failed}${pass.skipJson}}""",
+     f""""sf1_total":${pass.total}%.3f,"sf1_failed":${pass.failed},"sf1_worst":${pass.worstJson(5)}""",
+     pass.times)
   }
 
   /** Tiny-corpus code warm-up: run each query once against the
@@ -797,43 +678,44 @@ object Bench {
     System.err.println(f"[bench] warm pass: $warmed/${names.size} queries at $warmDir in ${(System.nanoTime() - t0) / 1e9}%.1fs")
   }
 
-  /** Untimed allocation-heavy run that sweeps the child's committed
-    * heap floor so the one-time page-fault bill never lands inside a
-    * timed query (see the forkChild -Xms note and sf10Section's
-    * absorber comment). Prefers the cached sf1 corpus (a ~6 s flagship
-    * run allocates enough to fault the floor); falls back to the
-    * caller's own corpus when sf1 was never synthesized.
+  /** Untimed allocation-heavy runs that sweep the child's committed heap
+    * floor so the one-time page-fault bill never lands inside a timed
+    * query (see the forkChild -Xms note and sf10Section's absorber
+    * comment). Runs at the cached sf1 corpus (a ~6 s flagship run
+    * allocates enough to fault the floor); falls back to the caller's
+    * own corpus when sf1 was never synthesized.
     *
     * Completion is a MEASURED precondition, not a hope (VERDICT r13
     * #1b: the single-pass absorber's effectiveness was stochastic —
     * sim #5 "swept only 14 s worth" and the residual bill landed
-    * inside timed queries): after each absorber pass a cheap timed
-    * canary (text_quality at the absorber corpus) runs TWICE; if the
-    * first canary exceeds 1.5× the second, the bill was still landing
-    * mid-canary — run another absorber pass. Bounded at 3 total
-    * passes; every absorb and canary time lands in the section JSON so
-    * the gate can see what the precondition measured. Returns that
-    * JSON fragment (trailing comma) for the section line. */
-  private def absorbHeapFloor(spark: SparkSession, fallbackDir: String): String = {
-    val dir =
-      if (new java.io.File("/tmp/graft_sf1/_SYNTH_DONE_v6").exists())
-        "/tmp/graft_sf1"
-      else fallbackDir
+    * inside timed queries): each round runs the `canary` query TWICE
+    * (preceded by an absorber pass — dedup_verified — on every round
+    * but the first unless `absorbFirst`); if the pair is asymmetric,
+    * the bill was still landing mid-canary and another round runs.
+    * Bounded at 3 rounds; every absorb and canary time lands in the
+    * section JSON so the gate can see what the precondition measured. */
+  private def settle(spark: SparkSession, fallbackDir: String,
+                     canary: String, absorbFirst: Boolean): Settle = {
+    val dir = if (sf1Marker.exists()) sf1Out else fallbackDir
     def run(name: String): Double = {
       val t0 = System.nanoTime()
-      try SparkEntry.queries.get(name).foreach(
-        _(spark, dir).write.format("noop").mode("overwrite").save())
+      try SparkEntry.queries(name)(spark, dir)
+        .write.format("noop").mode("overwrite").save()
       catch { case _: Throwable => }
       (System.nanoTime() - t0) / 1e9
     }
     val absorbS = scala.collection.mutable.ArrayBuffer.empty[Double]
     val canaryS = scala.collection.mutable.ArrayBuffer.empty[Double]
     var settled = false
-    while (!settled && absorbS.size < 3) {
-      absorbS += run("dedup_verified")
-      val c1 = run("text_quality")
-      val c2 = run("text_quality")
+    var rounds = 0
+    while (!settled && rounds < 3) {
+      val absorb =
+        if (absorbFirst || rounds > 0) Some(run("dedup_verified")) else None
+      absorbS ++= absorb
+      val c1 = run(canary)
+      val c2 = run(canary)
       canaryS += c1; canaryS += c2
+      rounds += 1
       // SYMMETRIC settlement (r14 final-sim finding): the original
       // `c1 <= max(1.5·c2, c2+2)` only caught the bill landing in the
       // FIRST canary — a pass-2 pair of (0.58 s, 7.40 s) declared
@@ -842,14 +724,24 @@ object Bench {
       val lo = math.min(c1, c2); val hi = math.max(c1, c2)
       settled = hi <= math.max(1.5 * lo, lo + 2.0)
       System.err.println(
-        f"[bench] heap-floor absorber pass ${absorbS.size} at $dir: " +
-        f"absorb ${absorbS.last}%.1fs canary $c1%.2fs/$c2%.2fs " +
+        f"[bench] $canary settle round $rounds at $dir: " +
+        absorb.map(a => f"absorb $a%.1fs ").getOrElse("") +
+        f"canary $c1%.2fs/$c2%.2fs " +
         (if (settled) "(settled)" else "(still faulting)"))
     }
-    val aj = absorbS.map(a => f"$a%.2f").mkString("[", ",", "]")
-    val cj = canaryS.map(c => f"$c%.2f").mkString("[", ",", "]")
-    s""""absorber":{"passes":${absorbS.size},"settled":$settled,"absorb_s":$aj,"canary_s":$cj},"""
+    Settle(settled, absorbS.toSeq, canaryS.toSeq)
   }
+
+  private final case class Settle(settled: Boolean, absorbS: Seq[Double],
+                                  canaryS: Seq[Double]) {
+    def absorbJson: String = absorbS.map(a => f"$a%.2f").mkString("[", ",", "]")
+    def canaryJson: String = canaryS.map(c => f"$c%.2f").mkString("[", ",", "]")
+  }
+
+  /** The main absorber's JSON fragment (trailing comma) for a section
+    * line. */
+  private def absorberJson(s: Settle): String =
+    s""""absorber":{"passes":${s.absorbS.size},"settled":${s.settled},"absorb_s":${s.absorbJson},"canary_s":${s.canaryJson}},"""
 
   /** The sf100 floor held back while MANDATE-tier sf10 queries run:
     * enough for ≥3 cheap spot queries (the sf100_spot mandate), not the
@@ -864,59 +756,6 @@ object Bench {
     * contention margin. */
   private val sf10MandateFlatS = 320.0
 
-  /** ANN-profile absorber canary (VERDICT r14 #1c): the main absorber's
-    * text_quality canary proves the SCAN profile settled, but r14's
-    * artifact carried ann_hamming at 50.1 s AFTER a settled absorber —
-    * the residual heap-fault bill lands by cumulative-allocation
-    * pattern, and the ANN family (codebook collects, posexplode
-    * distance arrays, window pre-cuts) allocates nothing like a
-    * text scan. Runs the cheapest ANN query (ann_pq) TWICE at the
-    * absorber corpus immediately before the ANN-heavy tierNew block;
-    * an asymmetric pair means the bill was landing mid-canary → run
-    * another allocation-heavy absorber pass and re-check. Bounded; all
-    * times land in the section JSON for the gate to read. */
-  private def annCanary(spark: SparkSession, fallbackDir: String): String = {
-    val dir =
-      if (new java.io.File("/tmp/graft_sf1/_SYNTH_DONE_v6").exists())
-        "/tmp/graft_sf1"
-      else fallbackDir
-    def run(name: String): Double = {
-      val t0 = System.nanoTime()
-      try SparkEntry.queries.get(name).foreach(
-        _(spark, dir).write.format("noop").mode("overwrite").save())
-      catch { case _: Throwable => }
-      (System.nanoTime() - t0) / 1e9
-    }
-    val absorbS = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val canaryS = scala.collection.mutable.ArrayBuffer.empty[Double]
-    var settled = false
-    var rounds = 0
-    while (!settled && rounds < 3) {
-      val c1 = run("ann_pq")
-      val c2 = run("ann_pq")
-      canaryS += c1; canaryS += c2
-      val lo = math.min(c1, c2); val hi = math.max(c1, c2)
-      // the same SYMMETRIC settlement the main absorber uses (r14)
-      settled = hi <= math.max(1.5 * lo, lo + 2.0)
-      rounds += 1
-      if (!settled && rounds < 3) absorbS += run("dedup_verified")
-      System.err.println(
-        f"[bench] ann canary round $rounds at $dir: $c1%.2fs/$c2%.2fs " +
-          (if (settled) "(settled)" else "(still faulting)"))
-    }
-    val aj = absorbS.map(a => f"$a%.2f").mkString("[", ",", "]")
-    val cj = canaryS.map(c => f"$c%.2f").mkString("[", ",", "]")
-    s""""ann_canary":{"settled":$settled,"canary_s":$cj,"absorb_s":$aj},"""
-  }
-
-  /** Parse the parent's sf1-times handoff file ({"query":secs,...}). */
-  private def readTimes(path: String): Map[String, Double] = try {
-    import scala.jdk.CollectionConverters._
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    om.readTree(new java.io.File(path)).fields().asScala
-      .map(e => e.getKey -> e.getValue.asDouble()).toMap
-  } catch { case _: Throwable => Map.empty }
-
   /** Child-JVM entry for the scale sections (VERDICT r12 #1/#7): the
     * r12 driver artifact measured dedup_verified at 103 s inside the
     * section vs 31.5 s standalone on the SAME binary — and the r12
@@ -930,22 +769,9 @@ object Bench {
     * start, so the child's own per-query deadline guards just work). */
   private def runChild(mode: String): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val sf1Times = sys.env.get("SPARK_GRAFT_SF1TIMES")
-      .map(readTimes).getOrElse(Map.empty)
-    var sf1TimesChild: Map[String, Double] = sf1Times
-    val spark = GraftSession(appName = "graft-bench")
     mode match {
-      case "child_sf10" =>
-        val (full, short) = sf10Section(spark, sfDir, sf1Times, 0.0)
-        println("@@FULL10@@" + full)
-        println("@@SHORT10@@" + short)
-        spark.stop()
-      case "child_sf100" =>
-        val (full, short) = sf100Spot(spark, sfDir, forced = false)
-        println("@@FULL100@@" + full)
-        println("@@SHORT100@@" + short)
-        spark.stop()
       case "child_scale" =>
+        val spark = GraftSession(appName = "graft-bench")
         // ALL scale sections (sf1 → sf10 → sf100) in ONE fresh
         // pinned+absorbed JVM (VERDICT r14 #1a): through r14 the sf1
         // section ran in the lazy-heap parent and its entries carried
@@ -962,26 +788,28 @@ object Bench {
         // setup is expensive at ANY corpus size and the sf1 stream
         // entries have always been cold-code numbers anyway)
         warmQueries(spark, sfDir,
-          (tierHeavy ++ tier1 ++ tierNew ++ tierMid ++ sf1Names)
-            .distinct.filterNot(_.startsWith("stream_")),
+          (sf10WarmOrder ++ sf1Order).distinct.filterNot(_.startsWith("stream_")),
           capS = 120.0)
         val sf1Dir = synthesizeSf1(spark, sfDir)
-        val prepJson = absorbHeapFloor(spark, sf1Dir)
+        val prepJson =
+          absorberJson(settle(spark, sf1Dir, "text_quality", absorbFirst = true))
         println("@@PREP@@" + s""""scale_prep":{$prepJson"dir":"$sf1Dir"}""")
         // sf1 sheds ITS tail first: the guard holds back the sf10
         // mandate-set estimate + the sf100 cheap-spot floor (top-down
         // budget — the mandate is never the residual claimant).
         // Sections honor the parent's env kill-switches (inherited).
-        if (!sys.env.get("SPARK_GRAFT_SF1").contains("off")) {
-          val (fullSf1, shortSf1, times) = sf1Section(spark, sfDir,
-            mandateReserveS = sf10MandateFlatS + sf100MandateReserveS)
-          println("@@FULLSF1@@" + fullSf1)
-          println("@@SHORTSF1@@" + shortSf1)
-          sf1TimesChild = times
-        }
+        val sf1Times =
+          if (sys.env.get("SPARK_GRAFT_SF1").contains("off")) Map.empty[String, Double]
+          else {
+            val (fullSf1, shortSf1, times) = sf1Section(spark, sfDir,
+              mandateReserveS = sf10MandateFlatS + sf100MandateReserveS)
+            println("@@FULLSF1@@" + fullSf1)
+            println("@@SHORTSF1@@" + shortSf1)
+            times
+          }
         if (!sys.env.get("SPARK_GRAFT_SF10").contains("off")) {
           val (full10, short10) =
-            sf10Section(spark, sfDir, sf1TimesChild, sf100Reserve,
+            sf10Section(spark, sfDir, sf1Times, sf100Reserve,
               shared = true)
           println("@@FULL10@@" + full10)
           println("@@SHORT10@@" + short10)
@@ -1001,7 +829,8 @@ object Bench {
 
   /** Fork a child JVM running `runChild(mode)` with `budget` seconds of
     * wall allowance; returns the `@@KEY@@payload` marker lines it
-    * printed as a KEY→payload map (FULL10/SHORT10/FULL100/SHORT100).
+    * printed as a KEY→payload map (PREP, FULLSF1/SHORTSF1, FULL10/SHORT10,
+    * FULL100/SHORT100).
     * The child gets the parent's own java binary, JVM args
     * (--add-opens, -Xmx) and classpath; stderr streams through live so
     * the driver log keeps the per-query lines. A hard watchdog at
@@ -1009,8 +838,7 @@ object Bench {
     * sections still report. Returns None on fork failure / crash /
     * zero markers. */
   private def forkChild(mode: String, budget: Double,
-                        sf1TimesPath: Option[String],
-                        hostFactor: Option[Double] = None): Option[Map[String, String]] = {
+                        hostFactor: Option[Double]): Option[Map[String, String]] = {
     import scala.jdk.CollectionConverters._
     try {
       val javaBin = new java.io.File(new java.io.File(
@@ -1037,7 +865,6 @@ object Bench {
         Seq("-cp", System.getProperty("java.class.path"), "graft.Bench", mode)
       val pb = new ProcessBuilder(cmd.asJava)
       pb.environment().put("SPARK_GRAFT_BUDGET_S", f"$budget%.0f")
-      sf1TimesPath.foreach(p => pb.environment().put("SPARK_GRAFT_SF1TIMES", p))
       // the parent's measured contention level rides into every scale
       // section's JSON (host_factor_at_trial) so the gate reads ratios
       hostFactor.foreach(f =>
@@ -1159,7 +986,7 @@ object Bench {
     val trialRates = try {
       import org.apache.spark.sql.functions._
       val nTrial = 524288L
-      val raw = Queries.synthSyslog(spark, sfDir).select(col("rawmsg").as("value"))
+      val raw = graft.queries.Synth.synthSyslog(spark, sfDir).select(col("rawmsg").as("value"))
       val nBase = math.max(1L, raw.count())
       val factor = ((nTrial + nBase - 1) / nBase).toInt
       val input = Seq.fill(factor)(raw).reduce(_ union _).limit(nTrial.toInt)
@@ -1300,7 +1127,7 @@ object Bench {
           System.err.println(
             f"[bench:scale] child skipped (grant $grant%.0fs under the 420s mandate floor)")
           None
-        } else forkChild("child_scale", grant, None,
+        } else forkChild("child_scale", grant,
           if (trialMed > 0) Some(hostRefMsgsPerSec / trialMed) else None)
       }
     def fromChild(key: String, skipTag: String, on: Boolean): String =
@@ -1347,7 +1174,7 @@ object Bench {
 
     // ---- main per-query loop LAST (r13 reorder): it self-truncates
     // against the wall instead of being killed by the driver's hard
-    // timeout, and the curated sf1Names queries run FIRST so a
+    // timeout, and the curated sf1 queries run FIRST so a
     // truncation drops only the stable scan-bound tail whose medians
     // have been flat every round.
     val sparkMain =
@@ -1356,8 +1183,8 @@ object Bench {
       if (args.isEmpty) SparkEntry.queries
       else SparkEntry.queries.filter(q => args.contains(q._1))
     val ordered = {
-      val curated = sf1Names.filter(selected.contains)
-      val tail = selected.keys.toSeq.filterNot(sf1Names.contains).sorted
+      val curated = sf1Order.filter(selected.contains)
+      val tail = selected.keys.toSeq.filterNot(sf1Set).sorted
       (curated ++ tail).map(n => n -> selected(n))
     }
     // NEVER skip a main-loop query (VERDICT r14 #5: main_skipped must
@@ -1374,7 +1201,7 @@ object Bench {
     var fullDone = 0
     var fullSpentS = 0.0
     var qIdx = 0
-    val curatedCount = ordered.count(q => sf1Names.contains(q._1))
+    val curatedCount = ordered.count(q => sf1Set(q._1))
     val results = ordered.map { case (name, fn) =>
       val remQ = ordered.size - qIdx
       // projection blends the two populations (r15 sim #3: the
@@ -1412,7 +1239,7 @@ object Bench {
       val qTrials =
         if (lean) 1
         else if (args.isEmpty && (remainingS < 300 ||
-          !sf1Names.contains(name))) 1
+          !sf1Set(name))) 1
         else nTrials
       while (i < qTrials && !failed) {
         val t0 = System.nanoTime()

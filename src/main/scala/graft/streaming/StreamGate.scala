@@ -84,13 +84,14 @@ object StreamGate {
     *
     * State-store sharding is sized to the gate's data: the stateful
     * shuffle partition count is frozen into the checkpoint at first
-    * start, and 32 state stores each committing delta files per batch
-    * is pure fixed overhead at verification scale (production sizes
-    * this knob to keyspace/volume; the gate's keyspace is tiny). The
-    * count is pinned PER QUERY by planning in a cloned session with its
-    * own SQLConf — the shared session's conf is never mutated, so
-    * concurrent planning elsewhere can't observe a transient value
-    * (the former set-and-restore around start() was racy).
+    * start, and one state store per core, each committing delta files
+    * per batch, is pure fixed overhead at verification scale
+    * (production sizes this knob to keyspace/volume; the gate's
+    * keyspace is tiny). The count is pinned PER QUERY by planning in a
+    * cloned session with its own SQLConf — the shared session's conf is
+    * never mutated, so concurrent planning elsewhere can't observe a
+    * transient value (the former set-and-restore around start() was
+    * racy).
     */
   def run(df: DataFrame, outputMode: String = "append",
           srcBytes: Long = 0L): DataFrame = {
@@ -113,9 +114,12 @@ object StreamGate {
     gate.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // State-store shard count scales with source volume (r8 judge: a
     // fixed 8 was a serialization cliff at sf1 — 6M rows shuffling
-    // through 8 stateful partitions on 32 cores). ~16 MiB of source per
-    // state partition, floor 8 (fixed per-store delta-commit overhead
-    // dominates below that), ceiling = the session's parallelism.
+    // through 8 stateful partitions on a 32-core host). ~16 MiB of
+    // source per state partition, floor 8 (fixed per-store delta-commit
+    // overhead dominates below that), ceiling = the session's shuffle
+    // width, which GraftSession sets to the core count: min(cores,
+    // max(8, srcBytes / 16 MiB)) partitions, so fewer than 8 on a host
+    // with fewer than 8 cores.
     val parts = {
       val base = spark.conf.get("spark.sql.shuffle.partitions").toInt
       if (srcBytes > 0)
